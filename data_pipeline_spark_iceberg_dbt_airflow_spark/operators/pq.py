@@ -490,6 +490,10 @@ def adc_scored_kernel(
             rn = np.sqrt(nrm2)
             rn_ok = (rn > 0) | np.isnan(rn)  # Spark orders NaN greatest
             out_a, out_b, out_c, out_nul = [], [], [], []
+            if not qids:  # no query: no pair, a zero-row batch
+                out_a = out_b = [np.empty(0, dtype="int64")]
+                out_c = [np.empty(0, dtype="float64")]
+                out_nul = [np.empty(0, dtype=bool)]
             for qi in range(len(qids)):
                 keep = ids != qids[qi]
                 dot = np.zeros(n, dtype="float64")

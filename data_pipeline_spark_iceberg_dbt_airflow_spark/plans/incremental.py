@@ -31,25 +31,26 @@ from __future__ import annotations
 from collections.abc import Callable
 from typing import Any
 
-from pyspark.errors import AnalysisException
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 
+def _read_target(spark: SparkSession, path: str) -> DataFrame | None:
+    """The materialized target, or None when nothing exists at ``path``
+    (first run). Existence is the filesystem's answer, not a parsed
+    read error: an IO or permission failure of the check raises, and an
+    existing path that does not read as parquet (no footers, corrupt
+    files) raises from the read -- treating either as "first run" would
+    flip the write to mode('overwrite') and destroy the target."""
+    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    if not jpath.getFileSystem(spark._jsc.hadoopConfiguration()).exists(jpath):
+        return None
+    return spark.read.parquet(path)
+
+
 def _target_exists(spark: SparkSession, path: str) -> bool:
-    # Only a definitive path-not-found means "first run". Any other read
-    # failure (permissions, corrupt footer, listing error) must abort:
-    # treating it as not-exists would flip the write to mode('overwrite')
-    # and destroy the existing materialized target on a transient fault.
-    try:
-        spark.read.parquet(path)
-        return True
-    except AnalysisException as ex:
-        cls = ex.getCondition() if hasattr(ex, "getCondition") else None
-        if cls == "PATH_NOT_FOUND" or "PATH_NOT_FOUND" in str(ex):
-            return False
-        raise
+    return _read_target(spark, path) is not None
 
 
 def incremental_append(
@@ -64,17 +65,18 @@ def incremental_append(
 ) -> DataFrame:
     """Materialize ``transform(source)`` into ``target_path`` incrementally.
 
-    Returns the post-write target DataFrame. ``transform`` must be
+    Returns the post-write target DataFrame, read with the schema the
+    existence probe already inferred (only a first run, which has no
+    target yet, infers after the write). ``transform`` must be
     row-local with respect to ``watermark_col`` windows (a projection /
     filter / per-row derivation) -- the same restriction dbt's incremental
     models live with: aggregates over all history need a full-refresh
     model instead.
     """
-    first_run = not _target_exists(spark, target_path)
-    if first_run:
+    target = _read_target(spark, target_path)
+    if target is None:
         delta = source
     else:
-        target = spark.read.parquet(target_path)
         hw = target.agg(F.max(watermark_col).alias("hw")).collect()[0]["hw"]
         if hw is None:
             delta = source
@@ -90,10 +92,11 @@ def incremental_append(
         else:
             delta = source.where(F.col(watermark_col) > F.lit(hw))
     out = transform(delta) if transform is not None else delta
-    out.write.mode("append" if not first_run else "overwrite").parquet(
-        target_path
-    )
-    return spark.read.parquet(target_path)
+    if target is None:
+        out.write.mode("overwrite").parquet(target_path)
+        return spark.read.parquet(target_path)
+    out.write.mode("append").parquet(target_path)
+    return spark.read.schema(target.schema).parquet(target_path)
 
 
 def incremental_dedup_append(
@@ -139,12 +142,12 @@ def incremental_dedup_append(
         .where(F.col("__rn") == 1)
         .drop("__rn")
     )
-    if not _target_exists(spark, target_path):
+    target = _read_target(spark, target_path)
+    if target is None:
         in_batch.write.mode("overwrite").parquet(target_path)
         return spark.read.parquet(target_path)
-    prior_keys = spark.read.parquet(target_path).select(key_col)
     fresh = blocklist_screen(
-        in_batch, prior_keys, key_col, bits_per_key=bits_per_key
+        in_batch, target.select(key_col), key_col, bits_per_key=bits_per_key
     )
     fresh.write.mode("append").parquet(target_path)
-    return spark.read.parquet(target_path)
+    return spark.read.schema(target.schema).parquet(target_path)

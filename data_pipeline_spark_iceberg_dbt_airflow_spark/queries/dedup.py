@@ -418,14 +418,17 @@ def _heap_bytes(spark: SparkSession) -> int:
         if v:
             try:
                 # Spark's JavaUtils grammar: optional one- OR two-letter
-                # suffix ('8g' == '8gb'), case-insensitive; a UNITLESS
-                # value for *.memory is MiB (byteStringAsMb), not bytes.
+                # suffix ('8g' == '8gb'; a bare 'b' is bytes),
+                # case-insensitive; a UNITLESS value for *.memory is MiB
+                # (byteStringAsMb), not bytes.
                 s = v.strip().lower()
                 mult = {"k": 2**10, "m": 2**20, "g": 2**30, "t": 2**40}
                 if s.endswith("b") and len(s) > 1 and s[-2] in mult:
                     return int(float(s[:-2]) * mult[s[-2]])
                 if s and s[-1] in mult:
                     return int(float(s[:-1]) * mult[s[-1]])
+                if s.endswith("b"):  # bare 'b': bytes
+                    return int(float(s[:-1]))
                 return int(float(s) * 2**20)
             except (ValueError, TypeError):
                 continue

@@ -48,6 +48,7 @@ Scale design (100 TB):
 from __future__ import annotations
 
 import pandas as pd
+from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -160,10 +161,13 @@ def _normed(spark: SparkSession, sf_dir: str) -> DataFrame:
     IS the parallelism of the cosine folds -- a single-split parquet file
     would run all pair arithmetic on one core (at 100 TB the scan arrives
     as thousands of splits and the widen is a guarded no-op). Persisted
-    once per (session, sf_dir) and shared across the family's branches."""
+    once per (session, sf_dir) and shared across the family's branches;
+    an entry whose storage was dropped (``spark.catalog.clearCache()``)
+    is rebuilt, never handed out unpinned."""
     key = (session_token(spark), sf_dir)
-    if key in _NORMED_CACHE:
-        return _NORMED_CACHE[key]
+    cached = _NORMED_CACHE.get(key)
+    if cached is not None and cached.storageLevel != StorageLevel.NONE:
+        return cached
     emb = read_table(spark, sf_dir, "embeddings", widen=True)
     out = emb.select(
         "vec_id", "label", "embedding", norm(F.col("embedding")).alias("nrm")

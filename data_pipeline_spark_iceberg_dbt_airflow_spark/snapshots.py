@@ -32,6 +32,22 @@ format design (the mechanism Iceberg/Delta themselves use):
   timestamp picks the newest manifest committed at or before the
   requested instant.
 
+A manifest ``v<N>.json`` holds:
+
+- ``version``: N; ``parent``: N-1, ``null`` for the first commit;
+- ``operation``: append, overwrite, merge or rollback;
+- ``committed_at_ns``: the commit instant (monotone over the parent);
+- ``dirs``: the data-directory basenames live at N;
+- ``schema``: the table schema as read (Spark's JSON schema, every field
+  nullable), or ``null`` when the live directories do not all carry one
+  schema -- an append whose frame's schema differs from its parent's,
+  any later append onto such a table, and a rollback to such a version.
+  Overwrite and merge always record it (they leave one directory).
+  A read of a snapshot that has it hands it to the parquet reader
+  instead of inferring the schema from the footers, which costs a Spark
+  job. Manifests without the key, ``null`` schemas and
+  ``merge_schema=True`` reads infer it.
+
 Scale shape: manifests are driver-side metadata (KBs; one tiny JSON
 per commit -- the same driver-coordinated commit every table format
 performs); data moves only through executor parquet writes. Every
@@ -54,6 +70,7 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 
 #: Fold the log into a compacted checkpoint file every this many
@@ -248,6 +265,21 @@ def _publish(table_dir: str, version: int, manifest: dict) -> bool:
     )
 
 
+def _read_schema(t):
+    """``StructType.jsonValue()`` as the parquet reader returns it:
+    every field, array element and map value nullable (Spark reads file
+    sources with ``asNullable``), field metadata untouched."""
+    if isinstance(t, list):
+        return [_read_schema(v) for v in t]
+    if not isinstance(t, dict):
+        return t
+    out = {k: v if k == "metadata" else _read_schema(v) for k, v in t.items()}
+    for k in ("nullable", "containsNull", "valueContainsNull"):
+        if k in out:
+            out[k] = True
+    return out
+
+
 def _next_ts(manifests: list[dict]) -> int:
     """Commit timestamp, clamped MONOTONE over the parent's: a wall
     clock stepped backwards (NTP) must not let as-of-timestamp reads
@@ -289,6 +321,7 @@ def _commit(
     os.makedirs(_manifest_dir(table_dir), exist_ok=True)
     new_name = uuid.uuid4().hex
     df.write.mode("overwrite").parquet(os.path.join(data_root, new_name))
+    schema = _read_schema(df.schema.jsonValue())
     while True:
         manifests = _load_manifests(table_dir)
         version = manifests[-1]["version"] + 1 if manifests else 0
@@ -300,14 +333,17 @@ def _commit(
             )
         if operation == "append" and manifests:
             dirs = manifests[-1]["dirs"] + [new_name]
+            same = manifests[-1].get("schema") == schema
         else:
             dirs = [new_name]
+            same = True
         manifest = {
             "version": version,
             "parent": manifests[-1]["version"] if manifests else None,
             "operation": operation,
             "committed_at_ns": _next_ts(manifests),
             "dirs": dirs,
+            "schema": schema if same else None,
         }
         if _publish(table_dir, version, manifest):
             return version
@@ -345,6 +381,7 @@ def snapshot_rollback(table_dir: str, version: int) -> int:
             "operation": "rollback",
             "committed_at_ns": _next_ts(manifests),
             "dirs": target["dirs"],
+            "schema": target.get("schema"),
         }
         if _publish(table_dir, new_version, manifest):
             return new_version
@@ -562,7 +599,9 @@ def snapshot_read(
     pushdown/pruning behave exactly as any other read. Pass
     ``merge_schema=True`` when appends evolved the schema across
     commits (columns added later read as NULL for older directories --
-    the same union-by-name posture as ``io.read_evolving``)."""
+    the same union-by-name posture as ``io.read_evolving``). A
+    snapshot whose manifest records its schema reads with it, so no
+    footer is opened before the query runs."""
     manifests = _load_manifests(table_dir)
     if not manifests:
         raise ValueError(f"no snapshots at {table_dir}")
@@ -588,6 +627,8 @@ def snapshot_read(
     reader = spark.read
     if merge_schema:
         reader = reader.option("mergeSchema", "true")
+    elif picked.get("schema") is not None:
+        reader = reader.schema(StructType.fromJson(picked["schema"]))
     return reader.parquet(*_live_paths(table_dir, picked))
 
 

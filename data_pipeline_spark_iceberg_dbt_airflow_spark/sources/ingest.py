@@ -16,7 +16,9 @@ extract_bitcoin_prices.py). Its control semantics, reproduced here exactly
 - one timestamp PER BATCH, stamped once before fetching, shared by every
   surviving row (:151,156,163,170) -- not per-row now().
 - S5  rows -> DataFrame lift through an explicit 9-field StructType
-  (:180-192).
+  (:180-192). The rows travel as one Arrow table, so the batch is a
+  JVM-local relation (``LocalRelation``): writing it starts no Python
+  worker.
 
 Transport is INJECTABLE: a source couples a ``fetch`` callable (returns
 the raw JSON-ish payload) with a ``parse`` callable (payload -> record).
@@ -155,9 +157,14 @@ def extract_batch(
     Returns ``None`` when every source failed (the reference's
     abort-if-empty guard, :174-177) -- callers skip the append for that
     cycle. ``now`` pins the batch timestamp for deterministic tests; by
-    default one UTC instant is stamped per batch, before fetching.
+    default one UTC instant is stamped per batch, before fetching. A
+    naive ``now`` is local wall time, as Spark reads a naive datetime.
     """
-    extracted_at = now or dt.datetime.now(dt.timezone.utc)
+    import pyarrow as pa
+
+    extracted_at = (now or dt.datetime.now(dt.timezone.utc)).astimezone(
+        dt.timezone.utc
+    )
     records: list[dict] = []
     for s in sources:
         try:
@@ -170,5 +177,15 @@ def extract_batch(
         records.append(rec)
     if not records:
         return None
-    rows = [tuple(r.get(f.name) for f in BITCOIN_SCHEMA.fields) for r in records]
-    return spark.createDataFrame(rows, BITCOIN_SCHEMA)
+    arrow_type = {
+        StringType(): pa.string(),
+        DoubleType(): pa.float64(),
+        TimestampType(): pa.timestamp("us", tz="UTC"),
+    }
+    table = pa.Table.from_pylist(
+        records,
+        schema=pa.schema(
+            [(f.name, arrow_type[f.dataType]) for f in BITCOIN_SCHEMA.fields]
+        ),
+    )
+    return spark.createDataFrame(table, BITCOIN_SCHEMA)

@@ -461,3 +461,31 @@ def test_adc_scored_kernel_matches_expr(spark, sf_dir):
     assert expr and set(expr) == set(kern)
     for k in expr:
         assert _same(expr[k], kern[k]), (k, expr[k], kern[k])
+
+
+def test_adc_scored_kernel_empty_queries(spark, sf_dir):
+    """No query row (no nanfree vector below QUERY_N): the kernel yields
+    zero-row batches, the same empty frame as the expression path."""
+    from data_pipeline_spark_iceberg_dbt_airflow_spark.operators.pq import (
+        adc_scored,
+        adc_scored_kernel,
+        pq_encode,
+    )
+
+    nanfree, books = _pq_books(spark, sf_dir)
+    coded = (
+        pq_encode(nanfree, books)
+        .where(F.col("codes").isNotNull())
+        .select(F.col("vec_id").alias("id_b"), "codes")
+    )
+    no_queries = nanfree.where(F.lit(False)).select(
+        F.col("vec_id").alias("id_a"),
+        F.col("embedding").alias("q_emb"),
+        F.col("nrm").alias("q_nrm"),
+    )
+    expr = adc_scored(coded, no_queries, books, F.col("id_b") != F.col("id_a"))
+    kern = adc_scored_kernel(coded, [], books)
+    assert [(f.name, f.dataType) for f in kern.schema] == [
+        (f.name, f.dataType) for f in expr.schema
+    ]
+    assert kern.collect() == expr.collect() == []

@@ -824,6 +824,9 @@ def test_heap_bytes_matches_spark_byte_string_grammar():
     assert _heap_bytes(_Spark("1T")) == 2**40
     # unitless == MiB, Spark's byteStringAsMb semantics
     assert _heap_bytes(_Spark("4096")) == 4096 * 2**20
+    # a bare 'b' suffix is bytes, not an unparseable value
+    assert _heap_bytes(_Spark("8b")) == 8
+    assert _heap_bytes(_Spark("8B")) == 8
     # unparseable falls through to the 1 GiB default, never raises
     assert _heap_bytes(_Spark("lots")) == 2**30
 

@@ -1445,6 +1445,29 @@ def test_normed_cache_evicts_on_wrapper_finalize(spark, sf_dir):
     assert sim._normed(spark, sf_dir) is sim._normed(spark, sf_dir)
 
 
+def test_normed_cache_rebuilds_after_clear_cache(spark, sf_dir):
+    """``spark.catalog.clearCache()`` drops the normed corpus's storage
+    behind the cache's back; the next lookup must hand out a persisted
+    corpus again, not the stale unpinned frame."""
+    from pyspark import StorageLevel
+
+    from data_pipeline_spark_iceberg_dbt_airflow_spark.queries import (
+        similarity as sim,
+    )
+    from data_pipeline_spark_iceberg_dbt_airflow_spark.queries.dedup import (
+        release_shingle_index,
+    )
+
+    assert sim._normed(spark, sf_dir).storageLevel != StorageLevel.NONE
+    spark.catalog.clearCache()
+    # the shingle index cache goes stale the same way: release it so
+    # later tests rebuild a pinned one
+    release_shingle_index(spark)
+    again = sim._normed(spark, sf_dir)
+    assert again.storageLevel != StorageLevel.NONE
+    assert again is sim._normed(spark, sf_dir)
+
+
 def test_grouped_lm_zero_count_c1_does_not_raise(spark):
     """ADVICE r10: the grouped scorer precomputes tier-1 log-probs over
     EVERY bi-model row, so an inconsistent caller-supplied model with a

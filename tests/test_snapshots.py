@@ -1084,3 +1084,155 @@ def test_vacuum_checkpoint_write_failure_cannot_resurrect_history(
     assert sorted(
         r["id"] for r in snapshot_read(spark, table, version=9).collect()
     ) == list(range(10))
+
+
+# --- manifest schema --------------------------------------------------------
+
+
+def _rich(spark, ids, extra=False):
+    """Rows over timestamp, date, decimal, array, struct and binary
+    columns, with non-nullable fields and field metadata; ``extra``
+    adds a column (a schema-evolving append)."""
+    import datetime as dt
+    from decimal import Decimal
+
+    from pyspark.sql.types import (
+        ArrayType,
+        BinaryType,
+        DateType,
+        DecimalType,
+        DoubleType,
+        IntegerType,
+        LongType,
+        StringType,
+        StructField,
+        StructType,
+        TimestampType,
+    )
+
+    fields = [
+        StructField("id", LongType(), False),
+        StructField("ts", TimestampType()),
+        StructField("d", DateType()),
+        StructField("amt", DecimalType(18, 4)),
+        StructField("tags", ArrayType(StringType(), False)),
+        StructField(
+            "pt",
+            StructType(
+                [
+                    StructField("x", DoubleType(), False),
+                    StructField("y", IntegerType()),
+                ]
+            ),
+            metadata={"comment": "point"},
+        ),
+        StructField("blob", BinaryType()),
+    ]
+    if extra:
+        fields.append(StructField("score", DoubleType()))
+    t0 = dt.datetime(2024, 3, 1, 12, 30, 0, 250000)
+    rows = []
+    for i in ids:
+        row = (
+            i,
+            None if i % 3 == 0 else t0 + dt.timedelta(hours=i),
+            dt.date(2024, 1, 1) + dt.timedelta(days=i),
+            Decimal(i) / Decimal(8),
+            [f"t{i}", "x"] if i % 2 else [],
+            (i * 0.5, None if i % 2 else i),
+            bytes([i % 256, 0, 255]),
+        )
+        rows.append(row + ((i * 1.5,) if extra else ()))
+    return spark.createDataFrame(rows, StructType(fields))
+
+
+def _manifest(table, version):
+    import data_pipeline_spark_iceberg_dbt_airflow_spark.snapshots as snap
+
+    return next(m for m in snap._load_manifests(table) if m["version"] == version)
+
+
+def _assert_reads_as_inferred(spark, table, version):
+    """The snapshot read equals a read that infers the schema from the
+    footers, in schema and rows; with a manifest schema it opens no
+    footer (no Spark job) before the query runs."""
+    import data_pipeline_spark_iceberg_dbt_airflow_spark.snapshots as snap
+
+    from .test_elt_cycle import _jobs
+
+    m = _manifest(table, version)
+    got, jobs = _jobs(
+        spark, lambda: snapshot_read(spark, table, version=version)
+    )
+    want = spark.read.parquet(*snap._live_paths(table, m))
+    assert got.schema == want.schema, version
+    key = lambda r: r["id"]
+    assert sorted(got.collect(), key=key) == sorted(want.collect(), key=key)
+    if m.get("schema") is not None:
+        assert jobs == 0, (version, jobs)
+
+
+def test_manifest_schema_reads_equal_inferred_reads(spark, table):
+    from pyspark.sql import functions as F
+
+    from data_pipeline_spark_iceberg_dbt_airflow_spark.snapshots import (
+        snapshot_merge,
+        snapshot_rollback,
+    )
+
+    snapshot_append(_rich(spark, [1, 2, 3]), table)  # v0 first append
+    snapshot_append(_rich(spark, [4, 5]), table)  # v1 same schema
+    snapshot_overwrite(_rich(spark, [6, 7, 8]), table)  # v2
+    updates = _rich(spark, [7, 9]).withColumn("amt", F.col("amt") * 2)
+    snapshot_merge(updates, table, "id")  # v3
+    snapshot_rollback(table, 1)  # v4 = v1's dirs
+    snapshot_append(_rich(spark, [10], extra=True), table)  # v5 evolved
+    snapshot_append(_rich(spark, [11]), table)  # v6 onto an evolved table
+    snapshot_rollback(table, 5)  # v7 = v5's dirs
+    snapshot_overwrite(_rich(spark, [12], extra=True), table)  # v8
+
+    recorded = {v: _manifest(table, v)["schema"] is not None for v in range(9)}
+    assert recorded == {
+        0: True, 1: True, 2: True, 3: True, 4: True,
+        5: False, 6: False, 7: False, 8: True,
+    }
+    assert _manifest(table, 4)["schema"] == _manifest(table, 1)["schema"]
+    for v in range(9):
+        _assert_reads_as_inferred(spark, table, v)
+    merged = {
+        r["id"]: r["amt"]
+        for r in snapshot_read(spark, table, version=3).collect()
+    }
+    assert sorted(merged) == [6, 7, 8, 9]
+    assert float(merged[7]) == 2 * 7 / 8  # the update doubled amt
+
+
+def test_legacy_manifest_without_schema_infers(spark, table):
+    snapshot_append(_rich(spark, [1, 2]), table)
+    snapshot_append(_rich(spark, [3]), table)
+    for v in (0, 1):
+        mpath = os.path.join(table, "_snapshots", f"v{v:08d}.json")
+        with open(mpath) as f:
+            m = json.load(f)
+        del m["schema"]
+        with open(mpath, "w") as f:
+            json.dump(m, f)
+    _assert_reads_as_inferred(spark, table, 1)
+    # an append onto a legacy parent cannot vouch for the old dirs
+    snapshot_append(_rich(spark, [4]), table)
+    assert _manifest(table, 2)["schema"] is None
+    _assert_reads_as_inferred(spark, table, 2)
+
+
+def test_merge_schema_read_ignores_manifest_schema(spark, table):
+    """The default read takes the manifest's schema as given (here a
+    doctored one naming only ``id``); ``merge_schema=True`` infers."""
+    snapshot_append(_df(spark, [1]), table)
+    mpath = os.path.join(table, "_snapshots", "v00000000.json")
+    with open(mpath) as f:
+        m = json.load(f)
+    m["schema"]["fields"] = m["schema"]["fields"][:1]
+    with open(mpath, "w") as f:
+        json.dump(m, f)
+    assert snapshot_read(spark, table).columns == ["id"]
+    assert snapshot_read(spark, table, merge_schema=True).columns == ["id", "v"]
